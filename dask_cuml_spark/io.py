@@ -148,9 +148,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load fixture tables as a dict of DataFrames (lazy scans)."""
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

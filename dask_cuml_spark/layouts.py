@@ -9,6 +9,8 @@ amortized across every query that reads it):
   grams  exploded (doc_id, xxhash64 5-gram) pairs bucketBy(_h): the
          shared inverted index q121 AND q119 read (100x: q121
          3.54x -> 0.77x; write 12.7 s, amortized across consumers).
+         Buckets = the building session's spark.sql.shuffle.partitions;
+         a refresh appends with the table's own bucket count.
   q112   corpus LSH index (shingle sets + band buckets): per-run
          signature work drops to Theta(|new batch|).
   pack   the stored sequence-packing manifest (r12): q126's placement
@@ -126,7 +128,7 @@ def ensure_layouts(
     # The r11 positioned-gram schema replaced the r8 distinct-pair one;
     # the legacy prefix is listed so pre-r11 tables GC on first call
     # (their tag matches the source but no query reads them anymore —
-    # drop via the never-matching keep_tag below).
+    # dropped as retired, whatever their tag).
     prefixes = {
         "q02": ("dcs_q02_orders_", "dcs_q02_lineitem_", "dcs_q02mf_"),
         "grams": (f"dcs_grams{_Q121_N}pos_", f"dcs_gramsmf{_Q121_N}_"),
@@ -206,11 +208,9 @@ def ensure_layouts(
 
                 inc = pack_layout_refresh(spark, sf_dir)
         if drop_stale:
-            for p in prefixes[name]:
-                drop_stale_layouts(spark, p, tag)
-            for p in legacy_prefixes.get(name, ()):
-                # retired schema: no keep_tag can match "\0" → drop all
-                drop_stale_layouts(spark, p, "\0")
+            drop_stale_layouts(
+                spark, prefixes[name], tag, legacy_prefixes.get(name, ())
+            )
         # honor the refresh result only if the layout is now COMPLETE
         # (advisor r13): incremental_refresh's 0.0 early-return attests
         # only the PRIMARY table, so a partially built multi-table

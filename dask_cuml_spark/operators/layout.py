@@ -82,16 +82,46 @@ def drop_table_and_location(spark, table: str) -> None:
         shutil.rmtree(loc, ignore_errors=True)
 
 
-def drop_stale_layouts(spark, prefix: str, keep_tag: str) -> list[str]:
-    """Drop catalog tables named ``{prefix}_{tag}`` whose tag is not
-    ``keep_tag`` — layouts built from a source parquet that has since
-    been rewritten (their fingerprint tag no longer matches, so no
-    query will ever read them again)."""
-    dropped = []
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix) and not t.name.endswith(keep_tag):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            dropped.append(t.name)
+def table_names(spark) -> list[str]:
+    """Names in the current database, temporary views included — the
+    names ``spark.catalog.listTables()`` gives, without building a
+    ``Table`` object per entry over Py4J."""
+    return [r.tableName for r in spark.sql("SHOW TABLES").collect()]
+
+
+def table_buckets(spark, table: str) -> int:
+    """Bucket count of a bucketed catalog table. An append must repeat
+    the table's own bucket spec: Spark rejects a different or missing
+    one."""
+    return int(
+        next(
+            r.data_type
+            for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect()
+            if r.col_name == "Num Buckets"
+        )
+    )
+
+
+def drop_stale_layouts(
+    spark,
+    prefixes: tuple[str, ...],
+    keep_tag: str,
+    retired: tuple[str, ...] = (),
+) -> list[str]:
+    """Drop catalog tables named ``{prefix}{tag}`` for any of
+    ``prefixes`` whose tag is not ``keep_tag`` — layouts built from a
+    source parquet that has since been rewritten (their fingerprint tag
+    no longer matches, so no query will ever read them again) — and
+    every table under a ``retired`` prefix, whatever its tag. The
+    catalog is listed once."""
+    dropped = [
+        n
+        for n in table_names(spark)
+        if (n.startswith(prefixes) and not n.endswith(keep_tag))
+        or n.startswith(retired)
+    ]
+    for n in dropped:
+        spark.sql(f"DROP TABLE IF EXISTS {n}")
     return dropped
 
 
@@ -249,10 +279,10 @@ def incremental_refresh(
     if spark.catalog.tableExists(new_table):
         return 0.0
     cur = source_files(sf_dir, source_name)
-    for t in spark.catalog.listTables():
-        if not t.name.startswith(table_prefix) or t.name.endswith(new_tag):
+    for name in table_names(spark):
+        if not name.startswith(table_prefix) or name.endswith(new_tag):
             continue
-        old_tag = t.name.rsplit("_", 1)[1]
+        old_tag = name.rsplit("_", 1)[1]
         mf = manifest_for(old_tag)
         if not spark.catalog.tableExists(mf):
             continue
@@ -300,10 +330,10 @@ def incremental_refresh(
         t0 = _time.perf_counter()
         if new_files:
             try:
-                append_fn(spark, new_files, t.name)
+                append_fn(spark, new_files, name)
             except IncrementalNotApplicable:
                 return None  # precondition failed pre-write → rebuild
-        spark.sql(f"ALTER TABLE {t.name} RENAME TO {new_table}")
+        spark.sql(f"ALTER TABLE {name} RENAME TO {new_table}")
         # multi-table layouts (pq: codes + model sidecar) carry their
         # sibling tables to the new tag in the same refresh — the
         # sidecar's CONTENT is untouched (FAISS add() never retrains)

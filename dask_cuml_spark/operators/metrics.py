@@ -46,12 +46,6 @@ def r2_score(df: DataFrame, label_col: str, pred_col: str) -> float:
     return float(1.0 - row["ss_res"] / ss_tot)
 
 
-def confusion_matrix(df: DataFrame, label_col: str, pred_col: str) -> DataFrame:
-    return df.groupBy(
-        F.col(label_col).alias("actual"), F.col(pred_col).alias("predicted")
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
 def adjusted_rand_score(df: DataFrame, label_col: str, pred_col: str) -> float:
     """ARI between two labelings (reference: cuml.metrics
     adjusted_rand_score; SURVEY §2A A19). One distributed contingency

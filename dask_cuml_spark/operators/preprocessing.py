@@ -72,19 +72,6 @@ class MinMaxScaler:
         return out
 
 
-def label_encode(df: DataFrame, col: str, output_col: str | None = None) -> DataFrame:
-    """Deterministic StringIndexer: codes assigned by sorted label order
-    over the distinct set, broadcast back. Uses the two-pass global rank
-    (functions/ranking.py) so there is no single-partition Window even
-    when the label cardinality is large."""
-    from dask_cuml_spark.functions.ranking import global_row_number
-
-    output_col = output_col or f"{col}_code"
-    ranked, _ = global_row_number(df.select(col).distinct(), [F.col(col)])
-    mapping = ranked.select(col, (F.col("_rn") - 1).alias(output_col))
-    return df.join(F.broadcast(mapping), col)
-
-
 def train_test_split(
     df: DataFrame,
     id_col: str,

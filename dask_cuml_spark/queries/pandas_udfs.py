@@ -799,22 +799,14 @@ def q112_index_refresh(spark: SparkSession, sf_dir: str) -> float | None:
         hashed_shingles,
         minhash_signatures,
     )
-    from dask_cuml_spark.operators.layout import incremental_refresh
+    from dask_cuml_spark.operators.layout import (
+        incremental_refresh,
+        table_buckets,
+    )
 
     bt, _st = _q112_index_tables(sf_dir)
     p = _Q112_PARAMS
     stem = f"q112_{p['n']}_{p['num_hashes']}_{p['bands']}"
-
-    def _buckets_of(spark_, tbl):
-        return int(
-            next(
-                r.data_type
-                for r in spark_.sql(
-                    f"DESCRIBE EXTENDED {tbl}"
-                ).collect()
-                if r.col_name == "Num Buckets"
-            )
-        )
 
     def append(spark_, new_files, old_bt):
         old_tag = old_bt.rsplit("_", 1)[1]
@@ -830,10 +822,11 @@ def q112_index_refresh(spark: SparkSession, sf_dir: str) -> float | None:
             .select("doc_id", "shingles")
             .localCheckpoint(eager=False)
         )
+        ns = table_buckets(spark_, old_st)
         (
-            sh.repartition(_buckets_of(spark_, old_st), F.col("doc_id"))
+            sh.repartition(ns, F.col("doc_id"))
             .write.mode("append")
-            .bucketBy(_buckets_of(spark_, old_st), "doc_id")
+            .bucketBy(ns, "doc_id")
             .sortBy("doc_id")
             .saveAsTable(old_st)
         )
@@ -846,7 +839,7 @@ def q112_index_refresh(spark: SparkSession, sf_dir: str) -> float | None:
             p["bands"],
             p["num_hashes"] // p["bands"],
         )
-        nb = _buckets_of(spark_, old_bt)
+        nb = table_buckets(spark_, old_bt)
         (
             bands.repartition(nb, F.col("band_hash"))
             .write.mode("append")

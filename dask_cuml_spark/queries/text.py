@@ -1235,16 +1235,18 @@ def q119_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pre-materialize the (doc_id, gram-hash) pairs bucketed by hash — the
 # inverted-index layout every gram consumer (boilerplate,
 # contamination, near-dup) can share — and BOTH the gram construction
-# and the wide exchange disappear from query time. q121_gram_layout
-# writes it (bucketBy(_h), one file per bucket so the scan reports
-# hash distribution AND sort order); q121 picks the catalog-gated
-# branch whenever the layout exists for its sf_dir. Correctness gates
-# run fresh sessions without the layout → oracle path untouched.
+# and the wide exchange disappear from query time. gram_layout writes
+# it (bucketBy(_h), one file per bucket so the scan reports hash
+# distribution AND sort order); the bucket count is the building
+# session's spark.sql.shuffle.partitions (sized to the cores locally,
+# to the data at big factors), and a refresh appends with the table's
+# own count. q121 picks the catalog-gated branch whenever the layout
+# exists for its sf_dir. Correctness gates run fresh sessions without
+# the layout → oracle path untouched.
 # ---------------------------------------------------------------------------
 _Q121_N = 5  # word n-gram width
 _Q121_DF = 2  # a gram in ≥ this many docs is "common" (boilerplate)
 _Q121_FLAG = 0.5  # flag docs whose common-gram fraction ≥ this
-_Q121_BUCKETS = 32
 
 
 def _q121_hashed_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,17 +1327,23 @@ def gram_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
     back to the full rebuild), appends survive the bucket spec
     (spike-verified + pytest-pinned), and the rename moves the table
     to the new source-fingerprint tag so every catalog-gated consumer
-    picks it up unchanged. Returns write seconds on a refresh, None
-    when not applicable."""
-    from dask_cuml_spark.operators.layout import incremental_refresh
+    picks it up unchanged. The append repeats the table's own bucket
+    count, so a layout built in a session of one size refreshes in a
+    session of another. Returns write seconds on a refresh, None when
+    not applicable."""
+    from dask_cuml_spark.operators.layout import (
+        incremental_refresh,
+        table_buckets,
+    )
 
     def append(spark_, new_files, old_tbl):
         batch = spark_.read.parquet(*new_files).select("doc_id", "text")
+        nb = table_buckets(spark_, old_tbl)
         (
             _positioned_grams(spark_, sf_dir, d=batch)
-            .repartition(_Q121_BUCKETS, F.col("_h"))
+            .repartition(nb, F.col("_h"))
             .write.mode("append")
-            .bucketBy(_Q121_BUCKETS, "_h")
+            .bucketBy(nb, "_h")
             .sortBy("_h")
             .saveAsTable(old_tbl)
         )
@@ -1352,13 +1360,19 @@ def gram_layout_refresh(spark: SparkSession, sf_dir: str) -> float | None:
 
 
 def gram_layout(
-    spark: SparkSession, sf_dir: str, n_buckets: int = _Q121_BUCKETS
+    spark: SparkSession, sf_dir: str, n_buckets: int | None = None
 ) -> float:
     """One-time POSITIONED inverted-index layout (r10 verdict task 3):
     (doc_id, pos, _h) occurrences written bucketBy(n_buckets, _h),
     sorted within buckets, one file per bucket (repartition on _h with
     Spark's own hash so write tasks align 1:1 with buckets — the q02
     layout mechanism). Returns wall seconds spent writing.
+
+    ``n_buckets`` defaults to the building session's
+    spark.sql.shuffle.partitions: every grams-served read scans one
+    task per bucket, so the layout is split as finely as the session's
+    own shuffles and no finer. A refresh (gram_layout_refresh) appends
+    with the table's own count.
 
     Three consumers amortize the one write: q121 boilerplate and q119
     contamination dedup to distinct pairs IN-PARTITION (hash
@@ -1371,6 +1385,8 @@ def gram_layout(
     t0 = _time.perf_counter()
     from dask_cuml_spark.operators.layout import drop_table_and_location
 
+    if n_buckets is None:
+        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     tbl = _gram_table(sf_dir)
     drop_table_and_location(spark, tbl)
     (

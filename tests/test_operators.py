@@ -1045,6 +1045,7 @@ def test_gram_layout_incremental_refresh(spark, tmp_path):
 
     import dask_cuml_spark.queries.text as T
     from dask_cuml_spark.layouts import ensure_layouts
+    from dask_cuml_spark.operators.layout import table_buckets
 
     sf = str(tmp_path / "sf")
     ddir = os.path.join(sf, "documents.parquet")
@@ -1056,6 +1057,7 @@ def test_gram_layout_incremental_refresh(spark, tmp_path):
     assert first["grams"] > 0.0
     tbl1 = T._gram_table(sf)
     assert spark.catalog.tableExists(tbl1)
+    built_buckets = table_buckets(spark, tbl1)
 
     # append-only ingest: a NEW part file, part-0 untouched
     pq_mod.write_table(
@@ -1072,12 +1074,10 @@ def test_gram_layout_incremental_refresh(spark, tmp_path):
     stored = sorted(map(tuple, spark.table(tbl2).collect()))
     fresh = sorted(map(tuple, T._positioned_grams(spark, sf).collect()))
     assert stored == fresh and len(stored) > 0
-    # bucket spec survived the append + rename
-    spec = {
-        r.col_name: r.data_type
-        for r in spark.sql(f"DESCRIBE EXTENDED {tbl2}").collect()
-    }
-    assert spec.get("Num Buckets") == str(T._Q121_BUCKETS)
+    # bucket spec survived the append + rename, and the default build
+    # sized it to the building session's shuffle partitions
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert table_buckets(spark, tbl2) == built_buckets == shuffle
     # consumer frame identical through the layout branch
     via_layout = sorted(map(tuple, T._gram_pairs(spark, sf).collect()))
     plain = sorted(map(tuple, T._q121_hashed_grams(spark, sf).collect()))
@@ -1086,6 +1086,82 @@ def test_gram_layout_incremental_refresh(spark, tmp_path):
     assert ensure_layouts(spark, sf, layouts=("grams",))["grams"] == 0.0
     spark.sql(f"DROP TABLE IF EXISTS {tbl2}")
     spark.sql(f"DROP TABLE IF EXISTS {T._gram_manifest_table(tbl2.rsplit('_', 1)[1])}")
+
+
+def test_gram_layout_refresh_keeps_the_tables_bucket_count(spark, tmp_path):
+    """A layout built with a bucket count other than the session's
+    shuffle partitions still refreshes: the append repeats the table's
+    own count (Spark rejects an append whose bucket spec differs from
+    the table's), and stored ≡ plain holds on the refreshed table."""
+    import os
+
+    import pyarrow.parquet as pq_mod
+
+    import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.layouts import ensure_layouts
+    from dask_cuml_spark.operators.layout import table_buckets
+
+    sf = str(tmp_path / "sf")
+    ddir = os.path.join(sf, "documents.parquet")
+    os.makedirs(ddir)
+    t = pq_mod.read_table(f"{SF}/documents.parquet")
+    pq_mod.write_table(t.slice(0, 300), os.path.join(ddir, "part-0.parquet"))
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != 4
+    T.gram_layout(spark, sf, n_buckets=4)
+
+    pq_mod.write_table(t.slice(300), os.path.join(ddir, "part-1.parquet"))
+    tbl = T._gram_table(sf)
+    try:
+        assert ensure_layouts(spark, sf, layouts=("grams",))["grams"] > 0.0
+        assert table_buckets(spark, tbl) == 4
+        stored = sorted(map(tuple, spark.table(tbl).collect()))
+        fresh = sorted(map(tuple, T._positioned_grams(spark, sf).collect()))
+        assert stored == fresh and len(stored) > 0
+        via_layout = sorted(map(tuple, T._gram_pairs(spark, sf).collect()))
+        plain = sorted(map(tuple, T._q121_hashed_grams(spark, sf).collect()))
+        assert via_layout == plain
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(
+            f"DROP TABLE IF EXISTS "
+            f"{T._gram_manifest_table(tbl.rsplit('_', 1)[1])}"
+        )
+
+
+def test_q121_default_gram_layout_plan(spark, tmp_path):
+    """The default build (ensure_layouts, no explicit bucket count)
+    writes as many buckets as the session's shuffle partitions, and the
+    grams-served q121 plan scans them bucketed with the doc_id
+    aggregate as its only hash exchange."""
+    import os
+    import shutil
+
+    import dask_cuml_spark.queries.text as T
+    from dask_cuml_spark.layouts import ensure_layouts
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    shutil.copy(f"{SF}/documents.parquet", f"{sf}/documents.parquet")
+    ensure_layouts(spark, sf, layouts=("grams",))
+    tbl = T._gram_table(sf)
+    try:
+        d = T.q121_boilerplate_ngrams(spark, sf)
+        assert len(d.collect()) > 0
+        fin = (
+            d._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0]
+        )
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert "Bucketed: true" in fin, fin[:2000]
+        assert f"SelectedBucketsCount: {n} out of {n}" in fin, fin[:2000]
+        assert fin.count("Exchange hashpartitioning") == 1, fin[:2500]
+        assert fin.count("Exchange hashpartitioning(doc_id") == 1, fin[:2500]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(
+            f"DROP TABLE IF EXISTS "
+            f"{T._gram_manifest_table(tbl.rsplit('_', 1)[1])}"
+        )
 
 
 def test_signs_layout_incremental_refresh(spark, tmp_path):
